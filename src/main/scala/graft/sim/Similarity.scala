@@ -316,65 +316,121 @@ object Similarity {
     * probing their `nprobe` nearest cells. Exact within probed cells; a
     * query touches ~nprobe/C of the corpus.
     *
-    * Scale shape: the centroid table is broadcast (C is small by
-    * construction), corpus cell assignment is a map-side `max_by`
-    * aggregation — no window, no sort — and the candidate join is a
-    * broadcast hash join on the cell id. Complements `lshTopKMulti`:
-    * IVF wins when the corpus is clustered (cells match density), LSH
-    * when it isn't.
+    * Scale shape: [[ivfTopKIndexed]] over an ephemeral, unpersisted cell
+    * assignment — map-only assignment and probe (the centroids ride in
+    * the native kernel), then broadcast hash joins on the cell id.
+    * Complements `lshTopKMulti`: IVF wins when the corpus is clustered
+    * (cells match density), LSH when it isn't.
+    *
+    * Query ids must be unique: a duplicate fails in the probe, by name.
+    * Corpus ids are assumed unique, as for [[buildIvfIndex]].
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               centroidPred: String, nprobe: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKFrom(queries, corpus, k,
-      corpus.filter(centroidPred).select(col(idCol).as("cid"), col(vecCol).as("cv0")),
-      nprobe, idCol, vecCol)
+    // zero refinement sweeps: `dim` is never read
+    rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim = 0,
+      refineIters = 0, idCol = idCol, vecCol = vecCol), k)
 
-  /** IVF-flat top-k against an explicit centroid table (cid, cv0) — the
-    * entry point once centroids come from [[refineCentroids]] instead of a
-    * sampling predicate.
+  // ---- the pieces every IVF entry point shares --------------------------
+  // Build, append, Lloyd refinement, the persisted query and the in-memory
+  // forms all seed, assign, probe and score through these, so the ranking
+  // tie-break and the scoring rule each live in one place.
+
+  private type CentEntries = IndexedSeq[(Long, Array[Float], Double)]
+
+  /** Seed centroids (cid, cv0) from the `centroidPred` rows of `train`,
+    * then run `refineIters` Lloyd sweeps ([[refineCentroids]]) over it.
     */
-  def ivfTopKFrom(queries: DataFrame, corpus: DataFrame, k: Int,
-                  centroids: DataFrame, nprobe: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    rankTopK(ivfScoredFrom(queries, corpus, centroids, nprobe, idCol, vecCol), k)
+  private def trainCentroids(train: DataFrame, centroidPred: String, dim: Int,
+                             refineIters: Int, gridScale: Int,
+                             idCol: String, vecCol: String): DataFrame =
+    (0 until refineIters).foldLeft(train.filter(centroidPred)
+        .select(col(idCol).as("cid"), col(vecCol).as("cv0"))) { (cents, _) =>
+      refineCentroids(train, cents, dim, gridScale, idCol, vecCol)
+    }
 
-  /** The scored candidate relation behind [[ivfTopKFrom]] — one
-    * (q_id, c_id, cos) row per (query, corpus vector in a probed cell)
-    * pair. Exposed, like [[lshMultiScored]], so recall gates can log the
-    * candidate fraction alongside the recall they report.
+  /** Each row of `vecs` (float array `v`) gains its norm `n` and its
+    * nearest cell `cell`: one map-only [[graft.functions.ArgTopCells]]
+    * projection at p = 1, whose ranking is `max_by(cid, struct(ccos,
+    * -cid))` (see the kernel's scaladoc; the s4/s6/s8... oracle rows
+    * replay it in DuckDB). Registration binds at analysis, so the plan is
+    * built right after it. The [[graft.functions.EvalOnce]] fence keeps a
+    * join's inferred `isnotnull(cell)` from being pushed below the
+    * projection with the kernel substituted in (two kernel passes). No
+    * centroids, no assignable rows: the empty frame, same schema.
     */
-  def ivfScoredFrom(queries: DataFrame, corpus: DataFrame,
-                    centroids: DataFrame, nprobe: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = nativeDot(corpus)
-    val cents = broadcast(centroids
-      .select(col("cid"), col("cv0"))
-      .withColumn("cn0", sqrt(dot(col("cv0"), col("cv0")))))
+  private def assignCells(vecs: DataFrame, cents: CentEntries): DataFrame =
+    if (cents.isEmpty) vecs.withColumn("n", lit(0.0d)).withColumn("cell", lit(0L)).limit(0)
+    else {
+      graft.functions.ArgTopCells.register(vecs.sparkSession, cents, 1)
+      graft.functions.EvalOnce.register(vecs.sparkSession)
+      vecs.withColumn("__ac",
+          graft.functions.EvalOnce(graft.functions.ArgTopCells(col("v"))))
+        .withColumn("n", col("__ac").getField("n"))
+        .withColumn("cell", element_at(col("__ac").getField("cells"), 1))
+        .drop("__ac")
+    }
 
-    val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
+  /** The probe: each query's `p` nearest cells by the same kernel, ranked
+    * (ccos DESC, cid ASC). One single-stage job collects (q_id, cell, v,
+    * n) — |Q| × min(p, C) rows, driver-bounded by the same contract that
+    * broadcasts them into the candidate join — and every consumer reads
+    * local relations: `qCells` (q_id, cell), `qLoc` (q_id, v, n) one row
+    * per query, and the sorted distinct probed cells.
+    *
+    * Query ids must be unique. Every query yields exactly min(p, C) probe
+    * rows, so a `q_id` with more is a duplicate, and it fails here by
+    * name instead of scoring one arbitrary copy.
+    */
+  private def probeCells(queries: DataFrame, cents: CentEntries, p: Int,
+                         idCol: String, vecCol: String)
+      : (DataFrame, DataFrame, Array[Long]) = {
+    import scala.jdk.CollectionConverters._
+    val spark = queries.sparkSession
+    graft.functions.ArgTopCells.register(spark, cents, p)
+    val plan = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
+      .withColumn("__tc", graft.functions.ArgTopCells(col("v")))
+      .select(col("q_id"), col("v"),
+        col("__tc").getField("n").as("n"),
+        explode(col("__tc").getField("cells")).as("cell"))
+    val rows = plan.collect()
+    val sch = plan.schema
+    val (qi, ci, vi, ni) = (sch.fieldIndex("q_id"), sch.fieldIndex("cell"),
+      sch.fieldIndex("v"), sch.fieldIndex("n"))
+    val byQuery = rows.groupBy(_.get(qi))
+    val perQuery = math.min(p, cents.length)
+    byQuery.find(_._2.length > perQuery).foreach { case (q, rs) =>
+      throw new IllegalArgumentException(s"query id $q appears " +
+        s"${rs.length / perQuery} times in the IVF query set — ids in $idCol must be unique")
+    }
+    val qCells = spark.createDataFrame(
+      rows.map(r => org.apache.spark.sql.Row(r.get(qi), r.get(ci))).toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(ci))))
+    val qLoc = spark.createDataFrame(
+      byQuery.values.map(_.head)
+        .map(r => org.apache.spark.sql.Row(r.get(qi), r.get(vi), r.get(ni))).toList.asJava,
+      org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(vi), sch(ni))))
+    (qCells, qLoc, rows.map(_.getLong(ci)).distinct.sorted)
+  }
 
-    // argmax centroid per corpus vector: max cosine, min-cid tie-break —
-    // a partial-aggregating max_by, not a window (no per-key sort at scale)
-    val cCell = c.crossJoin(cents)
-      .withColumn("ccos", cosine(dot(col("v"), col("cv0")), col("n"), col("cn0")))
-      .groupBy(col("c_id"))
-      .agg(first(col("v")).as("v"), first(col("n")).as("n"),
-        max_by(col("cid"), struct(col("ccos"), (-col("cid")).as("nc"))).as("cell"))
+  /** The stored rows of each query's probed cells, minus the query
+    * itself: `assigned` (c_id, cell, payload) against the probe's
+    * broadcast (q_id, cell) rows.
+    */
+  private def probedCandidates(assigned: DataFrame, qCells: DataFrame): DataFrame =
+    assigned.join(broadcast(qCells), Seq("cell")).filter(col("q_id") =!= col("c_id"))
 
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cid").asc)
-    val qCells = q.crossJoin(cents)
-      .withColumn("ccos", cosine(dot(col("v"), col("cv0")), col("n"), col("cn0")))
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("cid").as("cell"))
-
-    cCell.join(broadcast(qCells), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(q.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))), Seq("q_id"))
+  /** The float32 scoring tail: exact cosine of every probed candidate
+    * (c_id, v, n, cell) against the probe's local query vector —
+    * (q_id, c_id, cos).
+    */
+  private def scoreFloat(assigned: DataFrame, qCells: DataFrame,
+                         qLoc: DataFrame): DataFrame = {
+    val dot = nativeDot(assigned)
+    probedCandidates(assigned, qCells)
+      .join(broadcast(qLoc.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))),
+        Seq("q_id"))
       .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
       .select(col("q_id"), col("c_id"), col("cos"))
   }
@@ -415,6 +471,11 @@ object Similarity {
     * quantization is `floor(x/s + 0.5)` — deterministic and
     * engine-portable, so the quantized index is still exact-oracle
     * checkable (`s14_ivf_q8_indexed`).
+    *
+    * Corpus ids (`idCol`) must be unique. This is a documented contract,
+    * not a check (a check would cost a full-corpus aggregate per build):
+    * a duplicated id is stored once per copy, and each copy is a
+    * separate candidate at query time.
     */
   def buildIvfIndex(corpus: DataFrame, centroidPred: String, dim: Int,
                     path: String, refineIters: Int = 1, gridScale: Int = 1024,
@@ -430,15 +491,12 @@ object Similarity {
     require(Storages(storage),
       s"storage must be one of ${Storages.mkString("/")}, got $storage")
     requireCarryNames(carry)
-    val dot = nativeDot(corpus)
     val train =
       if (trainFraction >= 1.0) corpus
       else graft.ops.Sampling.sampleFraction(corpus, col(idCol), trainSalt,
         trainFraction)
-    var cents = train.filter(centroidPred)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
-    for (_ <- 0 until refineIters)
-      cents = refineCentroids(train, cents, dim, gridScale, idCol, vecCol)
+    val cents = trainCentroids(train, centroidPred, dim, refineIters, gridScale,
+      idCol, vecCol)
     // materialize the refinement ONCE (eager local checkpoint of the tiny
     // centroid relation), write the store from the materialized rows, and
     // hand the same rows to the assignment sweep below — round 13: the
@@ -531,6 +589,27 @@ object Similarity {
       s
     }
 
+  /** The stored form an append must follow. The build-time manifest is
+    * the authority: unlike the data files, it survives a fully-reclaimed
+    * index (every live generation emptied by deletes), where schema
+    * inference would fall back to float32 and silently corrupt a
+    * quantized index's scoring dispatch. Schema inference over
+    * `assigned/` remains only for pre-manifest layouts, and float32 when
+    * there is nothing to infer from.
+    */
+  private def storedForm(spark: org.apache.spark.sql.SparkSession,
+                         path: String): String =
+    readStorageManifest(spark, path).getOrElse {
+      try {
+        val cols = spark.read.parquet(s"$path/assigned").columns
+        if (cols.contains("codes")) "pq"
+        else if (cols.contains("q8")) "int8"
+        else "float32"
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException => "float32"
+      }
+    }
+
   /** Whole-file-then-rename publish of a tiny `path/_meta/<name>` record
     * (the `_gens` pattern: the file appears atomically or not at all).
     */
@@ -564,13 +643,15 @@ object Similarity {
     * partitioning and query plumbing. `carry` metadata may not collide with
     * them: the stored-form dispatch is by schema (a float32 index with a
     * carry column named `codes` would silently take the PQ scoring branch
-    * at query time), and the query join aliases would shadow a carry named
-    * `q_id`/`cos` — so the collision fails at BUILD time, by name.
+    * at query time), the query join aliases would shadow a carry named
+    * `q_id`/`cos`, and the kernel scratch columns `__ac`/`__tc` would
+    * overwrite a carry of that name — so the collision fails at BUILD
+    * time, by name.
     */
   val ReservedIndexCols: Set[String] = Set(
     "c_id", "v", "n", "cell", "g", "__g", "__pqb", "codes", "rn", "q8",
     "q8_scale", "qn", "cid", "cv0", "cn0", "ccos", "q_id", "cos", "qv",
-    "qa", "qan", "qtab", "num", "crn", "rank")
+    "qa", "qan", "qtab", "num", "crn", "rank", "__ac", "__tc")
 
   private def requireCarryNames(carry: Seq[String]): Unit = {
     val clash = carry.filter(ReservedIndexCols)
@@ -600,6 +681,9 @@ object Similarity {
     * not move the centroids, so after enough drift the cells stop
     * matching corpus density and a rebuild re-refines — rebuild
     * threshold policy stays with the caller.
+    *
+    * Delta ids must be unique: the [[buildIvfIndex]] id contract,
+    * documented and not checked.
     */
   def appendToIvfIndex(delta: DataFrame, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding",
@@ -608,29 +692,14 @@ object Similarity {
                        cachedCentroids: Option[DataFrame] = None): Unit = {
     requireCarryNames(carry)
     // the stored form follows the EXISTING index (an append can never
-    // silently mix storage forms): the build-time manifest is the
-    // authority — unlike the data files, it survives a fully-reclaimed
-    // index (every live generation emptied by deletes), where schema
-    // inference would fall back to float32 and silently corrupt a
-    // quantized index's scoring dispatch. Schema inference remains only
-    // as the pre-manifest legacy path; the explicit override only
-    // matters when neither exists yet.
+    // silently mix storage forms); the explicit override only matters
+    // when the index records none yet
     val stored = storage match {
       case Some(s) =>
         require(Storages(s),
           s"storage must be one of ${Storages.mkString("/")}, got $s")
         s
-      case None =>
-        readStorageManifest(delta.sparkSession, path).getOrElse {
-          try {
-            val cols = delta.sparkSession.read.parquet(s"$path/assigned").columns
-            if (cols.contains("codes")) "pq"
-            else if (cols.contains("q8")) "int8"
-            else "float32"
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => "float32"
-          }
-        }
+      case None => storedForm(delta.sparkSession, path)
     }
     assignIntoIndex(delta, path, SaveMode.Append, idCol, vecCol, carry,
       storage = stored, centroids = cachedCentroids)
@@ -676,19 +745,9 @@ object Similarity {
     val spark = vectors.sparkSession
     val cents = spark.read.parquet(s"$path/centroids").cache()
     cents.count() // materialize before the first trigger
-    // resolve the stored form ONCE (manifest; legacy pre-manifest
-    // layouts fall back to schema inference exactly as appendToIvfIndex)
-    val storedForm = readStorageManifest(spark, path).getOrElse {
-      try {
-        val cols = spark.read.parquet(s"$path/assigned").columns
-        if (cols.contains("codes")) "pq"
-        else if (cols.contains("q8")) "int8"
-        else "float32"
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => "float32"
-      }
-    }
-    val cachedCb = if (storedForm == "pq") {
+    // resolve the stored form ONCE, as appendToIvfIndex does per call
+    val stored = storedForm(spark, path)
+    val cachedCb = if (stored == "pq") {
       val (raw, pqM, w) = readPqCodebooks(spark, path)
       val c = raw.cache(); c.count()
       Some((c, pqM, w))
@@ -698,7 +757,7 @@ object Similarity {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         assignIntoIndex(batch, path, SaveMode.Append, idCol, vecCol, carry,
-          storage = storedForm, centroids = Some(cents),
+          storage = stored, centroids = Some(cents),
           pqCodebooks = cachedCb)
         compactEvery.foreach { n =>
           if ((batchId + 1) % n == 0) compactIvfIndex(spark, path)
@@ -722,8 +781,8 @@ object Similarity {
     q
   }
 
-  /** The shared assignment sweep: score `vecs` against the index's stored
-    * centroids (broadcast), pick each vector's argmax cell, write into the
+  /** The build/append assignment sweep: assign `vecs` to the index's
+    * stored centroids (`assignCells`) and write them into the
     * cell-partitioned layout under `mode`. With `quantize` the stored
     * payload is the SQ8 form ([[withQuantized]]: `q8` int array +
     * `q8_scale`) plus the integer norm `qn` INSTEAD of the float vector —
@@ -742,35 +801,15 @@ object Similarity {
     // refinement, append sees exactly what the build stored. A caller
     // holding the stream-lifetime cache passes it in so each micro-batch
     // collects from memory instead of re-scanning the parquet store.
-    // Round 14: the assignment is MAP-ONLY — the centroid table (tiny by
-    // construction; it was broadcast whole before) rides inside the
-    // native [[graft.functions.ArgTopCells]] kernel, so the per-vector
-    // argmax costs no crossJoin row blowup and, crucially, no groupBy
-    // EXCHANGE of the whole corpus: the build's only remaining shuffle is
-    // the cell-clustered write below. Ranking semantics are the previous
-    // max_by(cid, struct(ccos, -cid)) verbatim (see the kernel's scaladoc;
-    // the s6/s8/... oracle rows replay them in DuckDB).
+    // The assignment is the shared map-only `assignCells` projection, so
+    // the build's only shuffle is the cell-clustered write below.
     val cents = collectCentEntries(
       centroids.getOrElse(spark.read.parquet(s"$path/centroids")))
     // `carry` = metadata columns stored alongside each vector — what
     // makes FILTERED search answerable from the index alone
-    val base = vecs.select(col(idCol).as("c_id") +: col(vecCol).as("v") +:
-      carry.map(col): _*)
-    val outCols = Seq(col("c_id"), col("v"), col("n")) ++
-      carry.map(col) :+ col("cell")
-    val assigned =
-      if (cents.isEmpty)
-        // no centroids, no assignable rows — the empty frame the old
-        // crossJoin shape produced, same schema
-        base.withColumn("n", lit(0.0d)).withColumn("cell", lit(0L))
-          .limit(0).select(outCols: _*)
-      else {
-        graft.functions.ArgTopCells.register(spark, cents, 1)
-        base.withColumn("__ac", graft.functions.ArgTopCells(col("v")))
-          .withColumn("n", col("__ac").getField("n"))
-          .withColumn("cell", element_at(col("__ac").getField("cells"), 1))
-          .select(outCols: _*)
-      }
+    val assigned = assignCells(
+      vecs.select(col(idCol).as("c_id") +: col(vecCol).as("v") +: carry.map(col): _*),
+      cents).select(Seq(col("c_id"), col("v"), col("n")) ++ carry.map(col) :+ col("cell"): _*)
     val stored = storage match {
       case "float32" => assigned
       case "int8" =>
@@ -1333,6 +1372,8 @@ object Similarity {
     * qualifying candidates per query reach `m × k` (see the inline
     * note) — the automatic form of the measured nprobe×4 remedy for
     * high-selectivity filters.
+    *
+    * Query ids must be unique: a duplicate fails in the probe, by name.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, k: Int, nprobe: Int,
@@ -1341,61 +1382,12 @@ object Similarity {
                      maxPrunedPaths: Int = MaxPrunedIndexPaths,
                      probeWidenTarget: Option[Int] = None): DataFrame = {
     val dot = nativeDot(queries)
-    import scala.jdk.CollectionConverters._
-    // the centroid relation is broadcast-class BY CONTRACT (it was shipped
-    // whole into every probe sweep), so collect it ONCE into kernel
-    // entries — round 14: the indexed query's fixed cost was 10 sub-200 ms
-    // jobs + ~0.9 s of driver gaps per call (OptProbe), dominated by store
-    // re-scans inside broadcast builds and the probe's window exchange
+    // collect the centroids ONCE; every probe resolution reuses them
     val centEntries = collectCentEntries(spark.read.parquet(s"$path/centroids"))
-    // the probe resolution, parameterized so the filtered path can widen
-    // it: per-query top-p cells plus the eagerly-collected distinct cell
-    // set the pruned scan is constructed over (intersected downstream
-    // with the cells that actually exist on disk — an empty cell has no
-    // directory; reading it would fail, skipping it is semantically
-    // identical)
-    def probeAt(p: Int): (DataFrame, DataFrame, Array[Long]) = {
-      // MAP-ONLY probe (round 14): the top-p cell ranking runs inside the
-      // native ArgTopCells kernel against the collected centroids — the
-      // previous crossJoin + row_number window cost a per-query exchange
-      // and a multi-stage job per probe resolution. One single-stage
-      // collect returns (q_id, cell, v, n); the ranking semantics are the
-      // window's (ccos DESC, cid ASC) verbatim.
-      graft.functions.ArgTopCells.register(spark, centEntries, p)
-      val plan = queries.select(col(idCol).as("q_id"), col(vecCol).as("v"))
-        .withColumn("__tc", graft.functions.ArgTopCells(col("v")))
-        .select(col("q_id"), col("v"),
-          col("__tc").getField("n").as("n"),
-          explode(col("__tc").getField("cells")).as("cell"))
-      // ONE executed job per probe resolution: the (q_id, cell) rows are
-      // |Q| × p — driver-bounded by the same contract that broadcasts
-      // them into the candidate join below — so collect them once, WITH
-      // the query vector and its norm (computed by the same fold the join
-      // side used to recompute), and serve every downstream consumer from
-      // local relations: the distinct probed-cell set, the (q_id, cell)
-      // join side, and the query-vector join side. Round 13 collected
-      // only (q_id, cell) and left the vector side as a plan, so each
-      // branch's broadcast build re-scanned the queries source — one full
-      // extra scan job per broadcast per call.
-      val rows = plan.collect()
-      val sch = plan.schema
-      val (qi, ci, vi, ni) = (sch.fieldIndex("q_id"), sch.fieldIndex("cell"),
-        sch.fieldIndex("v"), sch.fieldIndex("n"))
-      val qc = spark.createDataFrame(
-        rows.map(r => org.apache.spark.sql.Row(r.get(qi), r.get(ci)))
-          .toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(ci))))
-      // one row per query id (probe rows repeat per probed cell; a caller
-      // passing duplicate query ids gets one representative row — the
-      // previous shape produced interleaved per-duplicate garbage anyway)
-      val seen = scala.collection.mutable.HashSet[Any]()
-      val qLoc = spark.createDataFrame(
-        rows.iterator.filter(r => seen.add(r.get(qi)))
-          .map(r => org.apache.spark.sql.Row(r.get(qi), r.get(vi), r.get(ni)))
-          .toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(sch(qi), sch(vi), sch(ni))))
-      (qc, qLoc, rows.map(_.getLong(ci)).distinct.sorted)
-    }
+    // the probe, parameterized so the filtered path can widen it. Its
+    // distinct probed cells are intersected downstream with the cells on
+    // disk: an empty cell has no directory, and skipping it is identical
+    def probeAt(p: Int) = probeCells(queries, centEntries, p, idCol, vecCol)
     val (qCells0, qLoc0, probed0) = probeAt(nprobe)
     val assignedRoot = s"$path/assigned"
     // SELECTIVITY-AWARE PROBE WIDENING (opt-in): a highly selective
@@ -1490,11 +1482,7 @@ object Similarity {
     // tables t[sub][cid] = q_sub · codebook[sub][cid], broadcast with the
     // queries, so each candidate costs pqM map lookups instead of a
     // dim-wide dot. Probing above always uses exact floats against the
-    // float centroids either way.
-    // every query-side relation below derives from the LOCAL probe rows
-    // (qLoc), never from the distributed queries plan — the expressions
-    // are unchanged, so values are bit-identical, but the broadcast
-    // builds stop re-scanning the queries source once per branch
+    // float centroids either way; every query side reads the local qLoc.
     val scored =
       if (assigned0.columns.contains("codes")) {
         val (cbRaw, pqM, w) = readPqCodebooks(spark, path)
@@ -1505,8 +1493,7 @@ object Similarity {
             map_from_entries(collect_list(struct(
               (col("sub").cast("long") * PqKeySpace + col("cid").cast("long")).as("k"),
               col("t").as("v")))).as("qtab"))
-        assigned.join(broadcast(qCells), Seq("cell"))
-          .filter(col("q_id") =!= col("c_id"))
+        probedCandidates(assigned, qCells)
           .join(broadcast(qtab), Seq("q_id"))
           .withColumn("num", aggregate(
             zip_with(col("codes"), sequence(lit(0), lit(pqM - 1)), (c, s) =>
@@ -1519,19 +1506,12 @@ object Similarity {
         val qq = withQuantized(qLoc.select(col("q_id"), col("v")), "v", "qa")
           .withColumn("qan", sqrt(dotI(col("qa"), col("qa")).cast(DoubleType)))
           .select(col("q_id"), col("qa"), col("qan"))
-        assigned.join(broadcast(qCells), Seq("cell"))
-          .filter(col("q_id") =!= col("c_id"))
+        probedCandidates(assigned, qCells)
           .join(broadcast(qq), Seq("q_id"))
           .withColumn("cos",
             dotI(col("qa"), col("q8")).cast(DoubleType) / (col("qan") * col("qn")))
           .select(col("q_id"), col("c_id"), col("cos"))
-      } else
-        assigned.join(broadcast(qCells), Seq("cell"))
-          .filter(col("q_id") =!= col("c_id"))
-          .join(broadcast(qLoc.select(col("q_id"), col("v").as("qv"), col("n").as("qn"))),
-            Seq("q_id"))
-          .withColumn("cos", cosine(dot(col("qv"), col("v")), col("qn"), col("n")))
-          .select(col("q_id"), col("c_id"), col("cos"))
+      } else scoreFloat(assigned, qCells, qLoc)
     rankTopK(scored, k)
   }
 
@@ -1579,8 +1559,8 @@ object Similarity {
   /** One Lloyd refinement step: assign every corpus vector to its nearest
     * (max-cosine) current centroid, then replace each nonempty cell's
     * centroid with the componentwise mean of its members. The assignment is
-    * the same broadcast-centroids + map-side `max_by` aggregation as the
-    * query path; the mean is computed as `dim` LONG sum-aggregates in ONE
+    * the map-only projection every build and query shares (`assignCells`,
+    * no exchange); the mean is computed as `dim` LONG sum-aggregates in ONE
     * groupBy (map-side partial sums, one shuffle on the cell id) over
     * components scaled by `gridScale` — so the aggregation is
     * order-independent: exact when components are multiples of
@@ -1593,20 +1573,10 @@ object Similarity {
   def refineCentroids(corpus: DataFrame, centroids: DataFrame, dim: Int,
                       gridScale: Int = 1024,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // round 14: map-only assignment via the [[graft.functions.ArgTopCells]]
-    // kernel (same max_by(cid, struct(ccos, -cid)) ranking — see
-    // assignIntoIndex) — the Lloyd step's per-vector argmax no longer pays
-    // a crossJoin + full-corpus groupBy exchange; the one shuffle left is
-    // the (cell) mean aggregate below, with map-side partial sums
-    val cents = collectCentEntries(centroids.select(col("cid"), col("cv0")))
-    if (cents.isEmpty)
-      // no centroids: the empty (cid, cv0) frame the crossJoin produced
-      return centroids.select(col("cid"), col("cv0")).limit(0)
-    graft.functions.ArgTopCells.register(corpus.sparkSession, cents, 1)
-    val assigned = corpus
-      .select(col(vecCol).as("v"))
-      .withColumn("cell", element_at(
-        graft.functions.ArgTopCells(col("v")).getField("cells"), 1))
+    // the one shuffle is the (cell) mean aggregate, with map-side partial
+    // sums; no centroids assign no rows, and the result is empty
+    val assigned = assignCells(corpus.select(col(vecCol).as("v")),
+      collectCentEntries(centroids))
     val sums = (0 until dim).map(d =>
       sum((element_at(col("v"), d + 1) * gridScale).cast("long")).as(s"s$d"))
     assigned.groupBy(col("cell"))
@@ -1711,10 +1681,10 @@ object Similarity {
     * The centroid table is broadcast-class BY CONSTRUCTION (it was
     * broadcast whole into every sweep), so the collect adds no driver
     * load; cn0 uses the same left fold the expression form computed.
+    * Cell ids are longs, so an integral id column of any width serves.
     */
-  private def collectCentEntries(cents: DataFrame)
-      : IndexedSeq[(Long, Array[Float], Double)] =
-    cents.select(col("cid"), col("cv0")).collect().map { r =>
+  private def collectCentEntries(cents: DataFrame): CentEntries =
+    cents.select(col("cid").cast("long"), col("cv0")).collect().map { r =>
       val cv = r.getAs[scala.collection.Seq[Float]](1).toArray
       (r.getLong(0), cv, math.sqrt(dotFoldLocal(cv, cv)))
     }.sortBy(_._1).toIndexedSeq
@@ -1955,10 +1925,15 @@ object Similarity {
 
   /** IVF-flat with Lloyd-refined centroids: seed cells from `centroidPred`
     * (a sampling predicate — the init every IVF build starts from), run
-    * `refineIters` refinement sweeps, then query as [[ivfTopKFrom]]. Each
-    * sweep is one corpus pass (broadcast centroids, two shuffles); one
-    * sweep is usually enough to snap sampled seeds onto cluster structure
-    * when the corpus has any — see PlantedClusters for the gate fixture.
+    * `refineIters` refinement sweeps, then query as [[ivfTopK]]. Each
+    * sweep is one corpus pass: a map-only assignment and one shuffle for
+    * the cell means. One sweep is usually enough to snap sampled seeds
+    * onto cluster structure when the corpus has any — see PlantedClusters
+    * for the gate fixture. This is [[buildIvfIndex]] followed by
+    * [[ivfTopKIndexed]] (float32 storage), row for row, without writing
+    * the index.
+    *
+    * Query ids must be unique: a duplicate fails in the probe, by name.
     */
   def ivfTopKRefined(queries: DataFrame, corpus: DataFrame, k: Int,
                      centroidPred: String, nprobe: Int, dim: Int,
@@ -1967,17 +1942,22 @@ object Similarity {
     rankTopK(ivfRefinedScored(queries, corpus, centroidPred, nprobe, dim,
       refineIters, gridScale, idCol, vecCol), k)
 
-  /** Scored relation behind [[ivfTopKRefined]] (for recall + candidate-
-    * fraction measurement).
+  /** Scored relation behind [[ivfTopK]] and [[ivfTopKRefined]] — one
+    * (q_id, c_id, cos) row per (query, corpus vector in a probed cell)
+    * pair. Exposed, like [[lshMultiScored]], so recall gates can log the
+    * candidate fraction alongside the recall they report. The corpus is
+    * assigned ephemerally (nothing persisted) and probed and scored by
+    * the helpers [[ivfTopKIndexed]] uses.
     */
   def ivfRefinedScored(queries: DataFrame, corpus: DataFrame,
                        centroidPred: String, nprobe: Int, dim: Int,
                        refineIters: Int = 1, gridScale: Int = 1024,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    var cents = corpus.filter(centroidPred)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv0"))
-    for (_ <- 0 until refineIters)
-      cents = refineCentroids(corpus, cents, dim, gridScale, idCol, vecCol)
-    ivfScoredFrom(queries, corpus, cents, nprobe, idCol, vecCol)
+    val cents = collectCentEntries(trainCentroids(corpus, centroidPred, dim,
+      refineIters, gridScale, idCol, vecCol))
+    val assigned = assignCells(
+      corpus.select(col(idCol).as("c_id"), col(vecCol).as("v")), cents)
+    val (qCells, qLoc, _) = probeCells(queries, cents, nprobe, idCol, vecCol)
+    scoreFloat(assigned, qCells, qLoc)
   }
 }

@@ -335,6 +335,43 @@ class IvfIndexSpec extends SparkSpec {
       Similarity.appendToIvfIndex(c, path, carry = Seq("g"))
     }
     assert(e2.getMessage.contains("reserved"))
+    // the assignment kernel's scratch column would overwrite the carry
+    val e3 = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfIndex(c, path, carry = Seq("__ac"))
+    }
+    assert(e3.getMessage.contains("__ac") && e3.getMessage.contains("reserved"))
+  }
+
+  test("a duplicated query id fails by name, in memory and indexed") {
+    val q = corpus.filter(SimQueries.QueryPred)
+    val dupId = q.select("vec_id").head().get(0)
+    val dq = q.union(q.filter(col("vec_id") === lit(dupId)))
+    val inMem = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKRefined(dq, corpus, SimQueries.K,
+        SimQueries.ClusterCentPred, SimQueries.NProbe, SimQueries.Dim).collect()
+    }
+    val indexed = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKIndexed(spark, path, dq, SimQueries.K, SimQueries.NProbe)
+        .collect()
+    }
+    for (e <- Seq(inMem, indexed))
+      assert(e.getMessage.contains(s"query id $dupId ") &&
+        e.getMessage.contains("unique"), e.getMessage)
+  }
+
+  test("a centroid predicate matching no row yields an empty top-k typed by the caller's ids") {
+    val sc = corpus.withColumn("vec_id", col("vec_id").cast("string"))
+    val q = corpus.filter(SimQueries.QueryPred)
+      .withColumn("vec_id", col("vec_id").cast("string"))
+    val none = "1 = 0"
+    for (df <- Seq(
+        Similarity.ivfTopK(q, sc, SimQueries.K, none, SimQueries.NProbe),
+        Similarity.ivfTopKRefined(q, sc, SimQueries.K, none, SimQueries.NProbe,
+          SimQueries.Dim))) {
+      assert(df.schema("q_id").dataType == org.apache.spark.sql.types.StringType)
+      assert(df.schema("c_id").dataType == org.apache.spark.sql.types.StringType)
+      assert(df.collect().isEmpty)
+    }
   }
 
   test("empty result keeps the caller's id type (no hardcoded long schema)") {
@@ -923,5 +960,33 @@ class IvfIndexSpec extends SparkSpec {
     // no max_by anywhere in the plan
     assert(!plan.contains("max_by"),
       "query-time plan must read stored assignments, not recompute them")
+  }
+
+  test("in-memory IVF plans have no nested-loop join and no probe window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((name, df) <- Seq(
+        "s4_ivf_topk" -> SimQueries.s4IvfTopK(spark, dir),
+        "s6_ivf_refined" -> SimQueries.s6IvfRefined(spark, dir))) {
+      val plan = df.queryExecution.executedPlan
+      assert(helper.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"$name: the in-memory path must not cross-join against the centroids")
+      // the only window is the final top-k (rank by cos per q_id), with
+      // its partial/final group limits; the probe ranks inside the kernel
+      val windows = helper.collect(plan) { case w: WindowExec => w.orderSpec }
+      val limits = helper.collect(plan) { case w: WindowGroupLimitExec => w.orderSpec }
+      assert(windows.size == 1, s"$name: ${windows.size} windows")
+      assert((windows ++ limits).forall(_.head.child.references.map(_.name).toSet == Set("cos")),
+        s"$name: a window ranks by something other than the top-k cosine")
+      // the corpus is ranked against the centroids once per row: the
+      // join's inferred isnotnull(cell) must not copy the kernel into a
+      // pushed filter (the probe and Lloyd passes ran before, collected)
+      val kernels = helper.collect(plan) { case p =>
+        p.expressions.map(_.collect { case k: graft.functions.ArgTopCellsExpr => k }.size).sum
+      }.sum
+      assert(kernels == 1, s"$name: the assignment kernel appears $kernels times")
+    }
   }
 }
