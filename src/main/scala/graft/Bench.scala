@@ -172,6 +172,44 @@ object Bench {
     }
   }
 
+  /** Keys of the non-timing telemetry rows (counters, load stamps, recall
+    * and size fractions), which live only in the full dump. Matched on the
+    * key's suffix, or the `ann_auto_` gate prefix, so a timing row whose
+    * name merely contains a token (`t6_bpe_merges`, `s16_ivf_pq_reranked`)
+    * is never dropped.
+    */
+  private[graft] val NonTimingKey = java.util.regex.Pattern.compile(
+    "^ann_auto_|_(rounds|epoch_merges|meanbatch|sweeps|loadavg|ambient|reran|recall|" +
+      "recall_p16|cand_frac|bytes_ratio|reclaim_cells|selectivity|batches)$")
+
+  private def jq(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The compact last stdout line: same contract shape as the full line —
+    * full-suite total, the slowest timing rows at 3 decimals greedily
+    * packed into a `budget`-char line, and `elided`, the number of timing
+    * rows that did not fit — plus a pointer at the verbatim full dump.
+    */
+  private[graft] def compactLine(results: Seq[(String, Double)], total: Double,
+                                 errorsN: Int, sfDir: String, budget: Int = 1750): String = {
+    def fmt3(v: Double): String =
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal.toPlainString
+    val cand = results
+      .filter { case (k, _) => !NonTimingKey.matcher(k).find() }
+      .sortBy { case (_, v) => -v }
+    val sb = new StringBuilder(
+      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":{""")
+    var taken = 0
+    cand.foreach { case (k, v) =>
+      val entry = (if (taken == 0) "" else ",") + jq(k) + ":" + fmt3(v)
+      if (sb.length + entry.length <= budget) { sb.append(entry); taken += 1 }
+    }
+    val errPart = if (errorsN == 0) "" else s""","errors_n":$errorsN"""
+    sb.append(s"""},"elided":${cand.size - taken}$errPart""")
+    sb.append(s""","full":"bench_out.json","sf":"$sfDir"}""")
+    sb.toString
+  }
+
   /** Ambient-foreign-core gate for SUSTAINED latency-distribution legs
     * (the per-poll mean/max rows) — an order tighter than the suite-wide
     * cores/8 launch gate. Round-12 lesson: a 1.48-core ambient inflated
@@ -1286,7 +1324,6 @@ object Bench {
       recall ++ filteredRecall ++
       clusteredGates ++ annAuto ++ detectTimes ++ sustained ++ detect10x ++
       detect100x ++ sf1Times ++ sf10Times
-    def jq(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qs = results.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
     val errJson =
       if (errors.isEmpty) ""
@@ -1321,37 +1358,10 @@ object Bench {
     // driver's BENCH capture keeps only a 2,000-char stdout tail, so the
     // line's opening '{' has been cut off EVERY round since r1 and
     // BENCH_r*/PERF_r* carried parsed:null. Emit, as the LAST stdout line,
-    // a compact JSON with the same contract shape — full-suite total, the
-    // slowest timing rows at 3 decimals greedily packed into a 1,750-char
-    // budget (≈87% of suite seconds at the r13 profile, ~65 rows), an
-    // `elided` count, and a pointer at the verbatim full dump above. This
-    // is output FORMATTING only: no timing methodology changed, and every
-    // key keeps its full-precision value in the full line / bench_out.json.
-    val compactLine = {
-      def fmt3(v: Double): String =
-        BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-          .bigDecimal.toPlainString
-      // non-timing telemetry rows (counters, load stamps, recall fractions)
-      // live only in the full dump; the compact line carries seconds
-      val nonTiming = java.util.regex.Pattern.compile(
-        "rounds|merges|meanbatch|sweeps|loadavg|ambient|_reran|recall|cand_frac")
-      val cand = results
-        .filter { case (k, _) => !nonTiming.matcher(k).find() }
-        .sortBy { case (_, v) => -v }
-      val budget = 1750
-      val sb = new StringBuilder(
-        s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":{""")
-      var taken = 0
-      cand.foreach { case (k, v) =>
-        val entry = (if (taken == 0) "" else ",") + jq(k) + ":" + fmt3(v)
-        if (sb.length + entry.length <= budget) { sb.append(entry); taken += 1 }
-      }
-      val errPart = if (errors.isEmpty) "" else s""","errors_n":${errors.size}"""
-      sb.append(s"""},"elided":${results.size - taken}$errPart""")
-      sb.append(s""","full":"bench_out.json","sf":"$sfDir"}""")
-      sb.toString
-    }
-    println(compactLine)
+    // the compact line (see `compactLine`). This is output FORMATTING
+    // only: every key keeps its full-precision value in the full line /
+    // bench_out.json.
+    println(compactLine(results, total, errors.size, sfDir))
     spark.stop()
   }
 }

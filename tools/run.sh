@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + Spark jars
-# (much faster iteration than `sbt runMain`). Usage:
-#   tools/run.sh graft.Verify /root/testdata/sf0.001 /tmp/verify_out
+# (much faster iteration than `sbt runMain`). Works from any copy of the
+# repo: the classpath is resolved from this script's own location. Usage:
+#   tools/run.sh graft.Verify <testdata>/sf0.001 /tmp/verify_out
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -16,5 +18,5 @@ exec java $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
